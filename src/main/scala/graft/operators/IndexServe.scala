@@ -30,8 +30,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object IndexServe {
 
-  /** Materialize under the lease, return as a local-relation frame. */
-  private def collected(s: SparkSession, df: DataFrame): DataFrame = {
+  /** Materialize a bounded frame (serves call it under the lease) and
+    * return it as a local-relation frame: no RDD outlives the call. */
+  private[operators] def collected(
+      s: SparkSession, df: DataFrame): DataFrame = {
     val rows = df.collect()
     s.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
   }

@@ -1086,8 +1086,9 @@ object PipelineQueries {
     *
     * Scale shape: deciles are one window per language; each draw is
     * one more window over the eligible slice; the anneal exclusion
-    * is a broadcast anti-join on a BUDGET-BOUNDED set (≤ budget
-    * tokens per lang → driver-safe by construction). */
+    * is a broadcast anti-join on a BUDGET-BOUNDED set, and both draws
+    * return to the driver as local relations (≤ budget tokens per
+    * lang → driver-safe by construction). */
   /** The two stage draws as row sets (doc_id, n_tok, bucket, lang,
     * decile) — the seam the spec pins (disjointness, decile gates,
     * budget bound, partition invariance). */
@@ -1115,24 +1116,25 @@ object PipelineQueries {
           SampleQueries.HASH_BUCKETS),
         orderCols = Seq(col("bucket"), col("doc_id")),
         tokCol = "n_tok", budget = budget)
-    val anneal = draw(tok.filter(col("decile") <= 2), CURR_ANNEAL_BUDGET)
-      .persist()
-    val bulk = draw(
-      tok.filter(col("decile") <= 8)
-        .join(broadcast(anneal.select(col("doc_id"))),
-          Seq("doc_id"), "left_anti"),
-      CURR_BULK_BUDGET)
-    // both draws are budget-bounded (≤ budget tokens per lang), so an
-    // eager localCheckpoint pins them, then every working frame —
-    // the cached anneal AND the shared decile checkpoint — releases
-    // deterministically (ADVICE r17 cache hygiene; checkpoint blocks
-    // are invisible to Dataset.unpersist, so tok needs the real
-    // release).
-    val annealOut = anneal.localCheckpoint(eager = true)
-    val bulkOut = bulk.localCheckpoint(eager = true)
-    anneal.unpersist()
-    org.apache.spark.sql.graftbridge.GraftExpr.releaseLocalCheckpoint(tok)
-    (annealOut, bulkOut)
+    // both draws are budget-bounded (≤ budget rows per lang: every
+    // doc carries ≥ 1 token), so each returns as a collected local
+    // relation and the shared decile checkpoint is released before
+    // return — no cached or checkpointed frame outlives the call, so
+    // nothing is left for driver GC to reclaim (ADVICE r17 cache
+    // hygiene; checkpoint blocks are invisible to Dataset.unpersist,
+    // so tok needs the real release)
+    try {
+      val anneal = IndexServe.collected(s,
+        draw(tok.filter(col("decile") <= 2), CURR_ANNEAL_BUDGET))
+      val bulk = IndexServe.collected(s, draw(
+        tok.filter(col("decile") <= 8)
+          .join(broadcast(anneal.select(col("doc_id"))),
+            Seq("doc_id"), "left_anti"),
+        CURR_BULK_BUDGET))
+      (anneal, bulk)
+    } finally {
+      org.apache.spark.sql.graftbridge.GraftExpr.releaseLocalCheckpoint(tok)
+    }
   }
 
   def pipelineCurriculum(s: SparkSession, dir: String): DataFrame = {

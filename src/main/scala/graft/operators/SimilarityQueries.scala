@@ -3407,7 +3407,7 @@ object SimilarityQueries {
     // cache the loop was about to materialize anyway.
     val gRow = e.agg(count(lit(1)), sum(size(col("emb")))).collect()(0)
     val cells = if (gRow.isNullAt(1)) 0L else gRow.getLong(1)
-    if (cells <= driverCellMax) {
+    if (driverCellMax > 0 && cells <= driverCellMax) {
       val rows = e.select(col("vec_id"), col("emb"), col("nrm"))
         .collect()
         .map(r => (r.getLong(0), r.getSeq[Double](1).toArray,
@@ -4133,10 +4133,6 @@ object SimilarityQueries {
     (mean, v, lam, n)
   }
 
-  /** The K-round iteration kernel over a frame of (already
-    * centered/deflated) `cv` vectors — shared by the first component
-    * and the deflated second component so the two loops can never
-    * drift arithmetically. */
   /** Cell ceiling (rows × dims) for the driver fixed-point shortcut
     * of the iterative numeric kernels — the [[pagerankRanks]] /
     * DRIVER_CC_MAX idiom, sized in CELLS because each row carries d
@@ -4146,9 +4142,17 @@ object SimilarityQueries {
     * loop replays the IDENTICAL exact-grid arithmetic (BigInt sums =
     * the decimal(38,0) sums by associativity; per-row folds are the
     * same explicitly-sequenced IEEE ops — parity spec-pinned). Above
-    * it the distributed loop runs unchanged. */
+    * it the distributed loop runs unchanged. A `driverCellMax <= 0`
+    * override disables the shortcut outright — in [[kmeansLoop]]
+    * (empty input included) and in [[pcaPowerLoop]]/[[powerIterate]]
+    * alike — which is how the parity spec forces the distributed
+    * path. */
   private[graft] val DRIVER_FP_CELLS = 1L << 21
 
+  /** The K-round iteration kernel over a frame of (already
+    * centered/deflated) `cv` vectors — shared by the first component
+    * and the deflated second component so the two loops can never
+    * drift arithmetically. */
   private[graft] def powerIterate(
       eC: DataFrame, d: Int, n: Long,
       driverCellMax: Long = DRIVER_FP_CELLS): (Array[Double], Double) = {

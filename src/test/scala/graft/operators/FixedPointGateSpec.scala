@@ -42,13 +42,16 @@ class FixedPointGateSpec extends SparkSpec {
       "ragged corpus, bit-exact centroids") {
     // ragged: every 7th row is one dim short — exercises the presence
     // counts (the explode form's per-dim divisor) on both paths
+    // withNorm reads the embeddings table shape (vec_id, label,
+    // embedding); kmeans never reads the label
     val base = planted(5, 140).map { case (id, emb) =>
-      (id, if (id % 7 == 0) emb.dropRight(1) else emb)
+      (id, (id % 3).toInt, if (id % 7 == 0) emb.dropRight(1) else emb)
     }
-    val e = SimilarityQueries.withNorm(base.toDF("vec_id", "emb"))
+    val cols = Seq("vec_id", "label", "embedding")
+    val e = SimilarityQueries.withNorm(base.toDF(cols: _*))
     val d = SimilarityQueries.kmeansLoop(e, 4)
     val x = SimilarityQueries.kmeansLoop(
-      SimilarityQueries.withNorm(base.toDF("vec_id", "emb")), 4, 0L)
+      SimilarityQueries.withNorm(base.toDF(cols: _*)), 4, 0L)
     assert(d.length == x.length && d.nonEmpty)
     d.zip(x).foreach { case ((cd, ed, nd), (cx, ex, nx)) =>
       assert(cd == cx)
@@ -59,7 +62,8 @@ class FixedPointGateSpec extends SparkSpec {
 
   test("kmeans driver gate: empty input returns empty centroids on " +
       "both paths") {
-    val e0 = Seq.empty[(Long, Seq[Double])].toDF("vec_id", "emb")
+    val e0 = Seq.empty[(Long, Int, Seq[Double])]
+      .toDF("vec_id", "label", "embedding")
     val e = SimilarityQueries.withNorm(e0)
     assert(SimilarityQueries.kmeansLoop(e, 4).isEmpty)
     assert(SimilarityQueries.kmeansLoop(
