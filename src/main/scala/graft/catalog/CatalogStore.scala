@@ -3,17 +3,20 @@ package graft.catalog
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.GraftExpr
 
 /** The engine's catalog store (snk_upsert / snk_parquet_catalog):
   * items as parquet partitioned by collection_id — the role pgstac's
   * time-partitioned Postgres tables play behind `ToPgStac`
   * (avhrr recipe.py:85,137; docker-compose.yml:30-44).
   *
-  * Upsert = last-write-wins per item_id (pgstac's idempotent item
-  * replace) implemented as dedup-rank over (existing ∪ delta) +
-  * DYNAMIC partition overwrite: only partitions present in the delta
-  * are rewritten — at 100 TB an incremental month touches a handful
-  * of partitions, not the whole catalog.
+  * Upsert = last-write-wins per (collection_id, item_id) (pgstac's
+  * idempotent item replace) implemented as dedup-rank over
+  * (existing ∪ delta), staged and swapped in per partition leaf. Only
+  * the collections the delta touches are read and rewritten, but each
+  * of them is rewritten WHOLE: in the monthly layout every month leaf
+  * of a touched collection is re-ranked and rewritten, not just the
+  * months the delta carries.
   */
 object CatalogStore {
 
@@ -92,19 +95,6 @@ object CatalogStore {
     temporal.join(spatial, Seq("collection_id"))
   }
 
-  /** Idempotent merge of `delta` into the catalog at `path`: newest
-    * ingested_at wins per item_id; ties broken by a content hash
-    * (order-independent — matches the JDBC sink's stored-tie guard),
-    * then delta-over-existing for identical rows — fully
-    * deterministic across retries AND replays.
-    * Touches only the delta's collection partitions.
-    *
-    * Item identity is (collection_id, item_id) — the partition key is
-    * part of the key, as in pgstac's per-collection item partitions.
-    * A delta that MOVES an item across collections upserts into the
-    * new collection but does not hunt the old partition for the stale
-    * copy (that would force a full-catalog scan per merge); a
-    * cross-collection move is delete + insert at the caller. */
   /** Deterministic content-hash tiebreak over `df`'s schema. Spark
     * prohibits hashing MAP types (no canonical order), so map-bearing
     * columns enter the hash through to_json — their CONTENT still
@@ -167,12 +157,50 @@ object CatalogStore {
     n
   }
 
+  /** Idempotent merge of `delta` into the catalog at `path`: newest
+    * ingested_at wins per item; ties broken by a content hash
+    * (order-independent — matches the JDBC sink's stored-tie guard),
+    * then delta-over-existing for identical rows — fully
+    * deterministic across retries AND replays.
+    *
+    * The delta is evaluated exactly once: it is materialized
+    * (localCheckpoint) up front and released before return, and every
+    * later step reads that copy. Its distinct collection ids come to
+    * the driver (one per touched collection, so bounded by the
+    * catalog's collection count) and scope the catalog read with a
+    * static `collection_id IN (...)` filter, which partition pruning
+    * applies at planning time. One evaluation also means a delta that
+    * would recompute differently (a re-listed source, a
+    * nondeterministic expression) cannot scope the read to one set of
+    * collections and merge rows of another. Every leaf of a touched
+    * collection is rewritten — all its months in the monthly layout:
+    * scoping the read to the delta's months would need a key probe,
+    * since a re-stamped item can move months.
+    *
+    * Item identity is (collection_id, item_id) — the partition key is
+    * part of the key, as in pgstac's per-collection item partitions.
+    * A delta that MOVES an item across collections upserts into the
+    * new collection but does not hunt the old partition for the stale
+    * copy (that would force a full-catalog scan per merge); a
+    * cross-collection move is delete + insert at the caller. */
   def upsert(spark: SparkSession, path: String, delta: DataFrame): Unit = {
+    // one evaluation of the delta, pinned until the merge is committed
+    val pinned = delta.localCheckpoint()
+    try mergePinned(spark, path, pinned)
+    finally GraftExpr.releaseLocalCheckpoint(pinned)
+  }
+
+  private def mergePinned(
+      spark: SparkSession, path: String, delta: DataFrame): Unit = {
+    val ids = delta.select("collection_id").distinct().collect()
+      .map(_.get(0)).toSeq
+    // an empty delta changes nothing: no read, no staged write. At
+    // bootstrap this matters — a zero-row partitioned write leaves a
+    // parquet-less directory that wedges every later read with
+    // UNABLE_TO_INFER_SCHEMA.
+    if (ids.isEmpty) return
     // bootstrap: first merge into a not-yet-existing catalog is a
-    // plain write (a streaming upsertSink's first batch hits this).
-    // An EMPTY first batch must not write: a zero-row partitioned
-    // write leaves a parquet-less directory that wedges every later
-    // read with UNABLE_TO_INFER_SCHEMA.
+    // plain write (a streaming upsertSink's first batch hits this)
     val hPath = new org.apache.hadoop.fs.Path(path)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(hPath)) {
@@ -183,10 +211,8 @@ object CatalogStore {
       // partCols from the columns it reads) would swap month= leaf
       // dirs in beside the bootstrap's loose files: a mixed-depth
       // layout that breaks partition discovery.
-      if (!delta.isEmpty) {
-        if (delta.columns.contains("month")) writeMonthly(delta, path)
-        else write(delta, path)
-      }
+      if (delta.columns.contains("month")) writeMonthly(delta, path)
+      else write(delta, path)
       return
     }
     val existingAll = read(spark, path)
@@ -198,7 +224,6 @@ object CatalogStore {
       else delta
     val partCols =
       if (monthly) Seq("collection_id", "month") else Seq("collection_id")
-    val affected = deltaP.select("collection_id").distinct()
     // additive schema evolution: a delta may CARRY NEW COLUMNS (the
     // catalog's existing rows take null there); it may never DROP
     // one — that would silently lose the column's data from every
@@ -214,7 +239,7 @@ object CatalogStore {
       else lit(null).cast(f.dataType).as(f.name)
     }
     val existing = existingAll
-      .join(broadcast(affected), Seq("collection_id"), "left_semi")
+      .filter(col("collection_id").isin(ids: _*))
       .select(aligned: _*)
     val dataCols = deltaP.columns.map(col).toIndexedSeq
     // item identity is (item_id, collection_id) — matching the

@@ -2,6 +2,10 @@ package graft.operators
 
 import java.nio.file.{Files, Paths}
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.{Duration, DurationInt, FiniteDuration}
+import scala.util.{Failure, Success, Try}
+
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -190,15 +194,11 @@ object SimilarityQueries {
     // other's stage tails) instead of strictly sequential scans
     val textRoot = TextQueries.buildTextIndex(s, dir)
     val vecRoot = buildVectorIndex(s, dir)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val lexF = Future {
+    val (lex, dense) = bothPools(s, {
       IndexServe.bm25TopK(s, textRoot, TextQueries.BM25_QUERY, HYBRID_POOL)
         .select(col("doc_id"), col("bm25")).collect()
         .map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    }
-    val denseF = Future {
+    }, {
       val qRows = withNorm(embeddings(s, dir))
         .filter(col("vec_id") === 0)
         .select(col("emb"), col("nrm")).collect()
@@ -208,13 +208,61 @@ object SimilarityQueries {
         HYBRID_POOL)
         .select(col("vec_id").as("doc_id"), col("sim")).collect()
         .map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    }
-    val lex = Await.result(lexF, Duration.Inf)
-    val dense = Await.result(denseF, Duration.Inf)
+    })
     // fusion is pool-bounded (≤ 2·HYBRID_POOL rows) driver work — the
     // mmrGreedy discipline; the distributed form's 2 global windows +
     // full-outer join + sort cost ~5 scheduled stages for ≤100 rows
     rrfFuseLocal(s, lex, dense)
+  }
+
+  /** Upper bound on a hybrid serve's two concurrent pool reads. */
+  private val POOL_READ_TIMEOUT: FiniteDuration = 10.minutes
+
+  /** Runs the two pool reads of a hybrid serve as concurrent jobs on a
+    * per-call two-thread pool (its threads inherit the caller's Spark
+    * job description) and waits at most [[POOL_READ_TIMEOUT]] for
+    * both. Both reads are tagged, so a timeout cancels whatever is
+    * still running; if either fails, the exception names every failed
+    * read, the second attached as suppressed. */
+  private[operators] def bothPools[A, B](s: SparkSession, lex: => A, dense: => B)
+      : (A, B) = {
+    val sc = s.sparkContext
+    val tag = s"graft-hybrid-pools-${java.util.UUID.randomUUID}"
+    val threads = new java.util.concurrent.atomic.AtomicInteger
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2, r => {
+      val t = new Thread(r, s"graft-hybrid-pool-${threads.incrementAndGet}")
+      t.setDaemon(true)
+      t
+    })
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    def tagged[T](read: => T): Future[T] = Future {
+      sc.addJobTag(tag)
+      try read finally sc.removeJobTag(tag)
+    }
+    try {
+      val lexF = tagged(lex)
+      val denseF = tagged(dense)
+      val deadline = POOL_READ_TIMEOUT.fromNow
+      // a failed (or timed-out) read cancels the other's jobs, so the
+      // second wait ends promptly and the sibling never runs on alone
+      def await[T](f: Future[T]): Try[T] = {
+        val r = Try(Await.result(f, deadline.timeLeft max Duration.Zero))
+        if (r.isFailure) sc.cancelJobsWithTag(tag)
+        r
+      }
+      (await(lexF), await(denseF)) match {
+        case (Success(l), Success(d)) => (l, d)
+        case (l, d) =>
+          val failed = Seq("lexical" -> l, "dense" -> d)
+            .collect { case (name, Failure(e)) => name -> e }
+          val err = new IllegalStateException(
+            "hybrid pool read failed: " +
+              failed.map { case (name, e) => s"$name: $e" }.mkString("; "),
+            failed.head._2)
+          failed.tail.foreach { case (_, e) => err.addSuppressed(e) }
+          throw err
+      }
+    } finally pool.shutdownNow()
   }
 
   /** Driver-side [[rrfFuse]] over already-collected pools — identical
@@ -334,18 +382,14 @@ object SimilarityQueries {
     import s.implicits._
     val textRoot = TextQueries.buildTextIndex(s, dir)
     val vecRoot = buildVectorIndex(s, dir)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val lexF = Future {
+    val (lex, dense) = bothPools(s, {
       val terms = TextQueries.BM25_BATCH
         .flatMap { case (id, ts) => ts.distinct.map(id -> _) }
         .toDF("query_id", "term")
       IndexServe.bm25TopKBatch(s, textRoot, terms, HYBRID_POOL)
         .select(col("query_id"), col("doc_id"), col("bm25")).collect()
         .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toSeq
-    }
-    val denseF = Future {
+    }, {
       val vmap = HYBRID_BATCH.toDF("query_id", "vec_id")
       val qs = withNorm(embeddings(s, dir))
         .join(broadcast(vmap), Seq("vec_id"))
@@ -356,9 +400,7 @@ object SimilarityQueries {
         // the ANN batch path routes query ids through driver-built
         // Long frames — pin to int here (the old rrfFuseBatch cast)
         .map(r => (r.getLong(0).toInt, r.getLong(1), r.getDouble(2))).toSeq
-    }
-    val lex = Await.result(lexF, Duration.Inf)
-    val dense = Await.result(denseF, Duration.Inf)
+    })
     val qids = (lex.map(_._1) ++ dense.map(_._1)).distinct.sorted
     qids.flatMap { qid =>
       rrfFuseRows(
@@ -4250,9 +4292,14 @@ object SimilarityQueries {
             floor(aggregate(zip_with(col("c"), vLit, (c, w) => c * w),
               lit(0d), (acc, x) => acc + x)
               * lit(KMEANS_GRID) + lit(0.5)).cast("decimal(38,0)"))
+        // try_element_at + cast BEFORE the multiply, as in
+        // refineCentroids. A ragged row's `a` is NULL (zip_with pads
+        // the shorter side), and only that keeps an ANSI element_at
+        // from being evaluated past the row's end; try_element_at
+        // yields NULL there, so sum skips the term either way
         val aggCols = (0 until d).map { j =>
-          sum(col("a") * floor(element_at(col("c"), j + 1)
-            * lit(KMEANS_GRID) + lit(0.5))).as(s"w$j")
+          sum(col("a") * floor(try_element_at(col("c"), lit(j + 1))
+            * lit(KMEANS_GRID) + lit(0.5)).cast("decimal(38,0)")).as(s"w$j")
         }
         val r = proj.agg(aggCols.head, aggCols.tail: _*).collect()(0)
         var j = 0

@@ -3,6 +3,8 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.catalog._
@@ -147,6 +149,83 @@ class CatalogSpec extends SparkSpec {
     // and nothing is left in the vacated month
     assert(after.filter(col("month") === "2022-05").count() == 0,
       "the emptied month leaf must be removed from disk")
+  }
+
+  test("upsert evaluates a nondeterministic delta once: no collection loses rows") {
+    // a delta whose collection changes between evaluations (a
+    // re-listed source would behave so): scoping the catalog read with
+    // one evaluation and merging another would swap collection B's
+    // leaf for the delta row alone
+    val path = s"$tmp/items_flip"
+    val (items, _) = ItemAssembly.assemble(
+      new FixtureGranuleSource().granules(spark))
+    val ids = items.select("item_id").orderBy("item_id").limit(5)
+      .collect().map(_.getString(0)).toSeq
+    val seed = items.filter(col("item_id").isin(ids: _*))
+      .withColumn("collection_id",
+        when(col("item_id").isin(ids.take(2): _*), lit("A"))
+          .otherwise(lit("B")))
+    CatalogStore.write(seed, path)
+    FlipCollection.calls.set(0)
+    val flip = udf(() =>
+      if (FlipCollection.calls.getAndIncrement() == 0) "A" else "B")
+      .asNondeterministic()
+    val delta = seed.filter(col("item_id") === ids.head)
+      .withColumn("item_id", lit("flip-new"))
+      .withColumn("collection_id", flip())
+    CatalogStore.upsert(spark, path, delta)
+    val after = CatalogStore.read(spark, path)
+    val kept = after.filter(col("item_id").isin(ids: _*))
+      .select("item_id").collect().map(_.getString(0)).toSet
+    assert(kept == ids.toSet, s"existing rows lost: ${ids.toSet -- kept}")
+    assert(after.count() == 6, "the delta row lands once, beside all 5")
+    assert(FlipCollection.calls.get() == 1, "the delta is evaluated once")
+  }
+
+  test("upsert evaluates the delta exactly once, bootstrap included") {
+    val path = s"$tmp/items_once"
+    val (items, _) = ItemAssembly.assemble(
+      new FixtureGranuleSource().granules(spark))
+    val ids = items.select("item_id").orderBy("item_id").limit(12)
+      .collect().map(_.getString(0)).toSeq
+    val rowsEvaluated = spark.sparkContext.longAccumulator("delta rows")
+    val counted = udf { (c: String) => rowsEvaluated.add(1); c }
+    def delta(part: Seq[String]) = items
+      .filter(col("item_id").isin(part: _*))
+      .withColumn("collection_id", counted(col("collection_id")))
+    val pinnedBefore = spark.sparkContext.getPersistentRDDs.size
+    // bootstrap: the catalog does not exist yet
+    CatalogStore.upsert(spark, path, delta(ids.take(8)))
+    assert(rowsEvaluated.value == 8)
+    rowsEvaluated.reset()
+    // incremental: 2 re-ingested items + 4 new ones
+    CatalogStore.upsert(spark, path, delta(ids.drop(6)))
+    assert(rowsEvaluated.value == 6)
+    assert(CatalogStore.read(spark, path).count() == 12)
+    assert(spark.sparkContext.getPersistentRDDs.size <= pinnedBefore,
+      "no persisted RDD may outlive an upsert")
+  }
+
+  test("upsert leaves an unaffected collection's files untouched") {
+    val path = s"$tmp/items_untouched"
+    val (items, _) = ItemAssembly.assemble(
+      new FixtureGranuleSource().granules(spark))
+    CatalogStore.writeMonthly(items.unionByName(
+      items.withColumn("collection_id", lit("UNTOUCHED"))), path)
+    def files(): Seq[String] = {
+      val root = java.nio.file.Paths.get(path, "collection_id=UNTOUCHED")
+      val walk = Files.walk(root)
+      try walk.iterator().asScala.map(root.relativize(_).toString)
+        .filter(_.endsWith(".parquet")).toSeq.sorted
+      finally walk.close()
+    }
+    val before = files()
+    assert(before.nonEmpty)
+    CatalogStore.upsert(spark, path, items.limit(3)
+      .withColumn("ingested_at",
+        current_timestamp() + expr("INTERVAL 1 HOUR")))
+    assert(files() == before,
+      "an upsert must not rewrite a collection the delta does not touch")
   }
 
   test("STAC search: bbox + interval + sort + keyset paging") {
@@ -448,4 +527,10 @@ class CatalogSpec extends SparkSpec {
 class MockObjectStoreFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getScheme: String = "mockobj"
   override def getUri: java.net.URI = java.net.URI.create("mockobj:///")
+}
+
+/** Call counter of the flipping collection UDF: a static, so every
+  * deserialized copy of the UDF's closure counts in one place. */
+object FlipCollection {
+  val calls = new java.util.concurrent.atomic.AtomicInteger
 }

@@ -197,4 +197,36 @@ class HybridRetrievalSpec extends SparkSpec {
       assert(r.getLong(3) == r.getLong(1) - r.getLong(2))
     }
   }
+
+  test("pool reads: a failed read cancels its sibling's job, and the " +
+    "error reports both failures") {
+    PoolReadProbe.started = false
+    val t0 = System.nanoTime()
+    val err = intercept[IllegalStateException] {
+      SimilarityQueries.bothPools(spark, {
+        while (!PoolReadProbe.started) Thread.sleep(10)
+        throw new IllegalArgumentException("lexical read broke")
+      }, {
+        spark.sparkContext.parallelize(Seq(1), 1).map { x =>
+          PoolReadProbe.started = true
+          val ctx = org.apache.spark.TaskContext.get()
+          val end = System.nanoTime() + 60L * 1000000000L
+          while (!ctx.isInterrupted() && System.nanoTime() < end)
+            Thread.sleep(10)
+          x
+        }.collect()
+      })
+    }
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(err.getMessage.contains("lexical read broke"))
+    assert(err.getMessage.contains("dense:"), err.getMessage)
+    assert(err.getSuppressed.length == 1)
+    assert(secs < 30, s"the dense job ran on for $secs s")
+  }
+}
+
+/** Set by the dense read's task once its job runs, so the lexical
+  * read fails only while that job is active. */
+object PoolReadProbe {
+  @volatile var started = false
 }
