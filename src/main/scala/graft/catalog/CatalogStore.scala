@@ -132,9 +132,9 @@ object CatalogStore {
     * path behind the API's Transaction extension. Returns the number
     * of items removed. The survivors are materialized (localCheckpoint)
     * BEFORE the directory is overwritten — overwriting a path mid-scan
-    * is a read-your-own-delete race. A 100 TB catalog deletes by
-    * partition-scoped rewrite or tombstone + compaction
-    * (CatalogMaintenance) instead of this full rewrite. */
+    * is a read-your-own-delete race — and released before return. A
+    * 100 TB catalog deletes by partition-scoped rewrite or tombstone +
+    * compaction (CatalogMaintenance) instead of this full rewrite. */
   def delete(spark: SparkSession, path: String,
       itemIds: Seq[String]): Long = {
     import org.apache.spark.sql.functions.col
@@ -147,13 +147,14 @@ object CatalogStore {
     if (n == 0) return 0L
     val keep = existing.drop("month")
       .filter(!col("item_id").isin(itemIds: _*)).localCheckpoint()
-    fs.delete(hPath, true)
-    // deleting the last item returns the catalog to bootstrap state —
-    // a zero-row partitioned write would wedge later reads instead
-    if (!keep.isEmpty) {
-      if (monthly) writeMonthly(keep, path) else write(keep, path)
-    }
-    keep.unpersist()
+    try {
+      fs.delete(hPath, true)
+      // deleting the last item returns the catalog to bootstrap state —
+      // a zero-row partitioned write would wedge later reads instead
+      if (!keep.isEmpty) {
+        if (monthly) writeMonthly(keep, path) else write(keep, path)
+      }
+    } finally GraftExpr.releaseLocalCheckpoint(keep)
     n
   }
 

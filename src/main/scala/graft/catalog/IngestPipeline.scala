@@ -1,6 +1,7 @@
 package graft.catalog
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.GraftExpr
 
 import graft.ingest.GranuleSource
 
@@ -24,14 +25,17 @@ object IngestPipeline {
       initial: Boolean = false,
       xstac: Option[ItemAssembly.XstacKwargs] = None): IngestResult = {
     // one scan of the (possibly remote/expensive) source: the
-    // checkpointed delta feeds assembly, both counts, and the write
+    // checkpointed delta feeds assembly, both counts, and the write,
+    // and is released before return
     val granules = source.granules(spark).localCheckpoint()
-    val (items, errors) = ItemAssembly.assemble(granules, xstac)
-    val finalItems = postprocess(items)
-    val nItems = finalItems.count()
-    if (initial) CatalogStore.write(finalItems, catalogPath)
-    else CatalogStore.upsert(spark, catalogPath, finalItems)
-    IngestResult(nItems, errors.count(),
-      CatalogStore.read(spark, catalogPath).count())
+    try {
+      val (items, errors) = ItemAssembly.assemble(granules, xstac)
+      val finalItems = postprocess(items)
+      val nItems = finalItems.count()
+      if (initial) CatalogStore.write(finalItems, catalogPath)
+      else CatalogStore.upsert(spark, catalogPath, finalItems)
+      IngestResult(nItems, errors.count(),
+        CatalogStore.read(spark, catalogPath).count())
+    } finally GraftExpr.releaseLocalCheckpoint(granules)
   }
 }

@@ -228,6 +228,31 @@ class CatalogSpec extends SparkSpec {
       "an upsert must not rewrite a collection the delta does not touch")
   }
 
+  test("delete releases its pinned survivors") {
+    val path = s"$tmp/items_delete"
+    val (items, _) = ItemAssembly.assemble(
+      new FixtureGranuleSource().granules(spark))
+    CatalogStore.write(items, path)
+    val total = CatalogStore.read(spark, path).count()
+    val ids = CatalogStore.read(spark, path).select("item_id")
+      .orderBy("item_id").limit(2).collect().map(_.getString(0)).toSeq
+    val pinnedBefore = spark.sparkContext.getPersistentRDDs.size
+    assert(CatalogStore.delete(spark, path, ids) == 2)
+    assert(spark.sparkContext.getPersistentRDDs.size <= pinnedBefore,
+      "no persisted RDD may outlive a delete")
+    assert(CatalogStore.read(spark, path).count() == total - 2)
+  }
+
+  test("ingest releases its checkpointed granules") {
+    val path = s"$tmp/items_ingest_release"
+    val source = new FixtureGranuleSource()
+    val pinnedBefore = spark.sparkContext.getPersistentRDDs.size
+    IngestPipeline.run(spark, source, path, initial = true)
+    IngestPipeline.run(spark, source, path)
+    assert(spark.sparkContext.getPersistentRDDs.size <= pinnedBefore,
+      "no persisted RDD may outlive an ingest run")
+  }
+
   test("STAC search: bbox + interval + sort + keyset paging") {
     val items = CatalogStore.read(spark, catalogPath)
     val q = CatalogQuery.Search(

@@ -12,13 +12,15 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
+  /** Built through the engine's front door, so the specs run on the
+    * engine's configuration — including the JVM-wide codegen cache
+    * size, which the first session to generate code fixes. */
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val s = GraftSession.configure(SparkSession.builder()
+        .master("local[4]")
+        .appName("graft-test")
+        .config("spark.sql.shuffle.partitions", "4")
+        .config("spark.ui.enabled", "false"))
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -5,6 +5,8 @@ import java.util.concurrent.Executors
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
 
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -101,52 +103,46 @@ class ConcurrentServeSpec extends SparkSpec {
         docs.filter(pmod(col("doc_id"), lit(3)) === b), root, b.toLong)
     }
     val pre = IndexServe.bm25TopK(spark, root).collect().toSeq
-    // a serving thread holds the lease through plan+execute in a
-    // loop; the maintenance attempt in between must refuse
-    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    // a serving thread serves through the facade, which holds the
+    // lease across plan+execute; the serve is held inside planning (so
+    // inside the lease) until the maintenance attempt has been made,
+    // which must refuse
     val served = new java.util.concurrent.atomic.AtomicLong(0L)
     val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
-    val gate = new java.util.concurrent.CountDownLatch(1)
-    val server = new Thread(() => {
-      while (!stop.get()) {
-        try {
-          // the facade holds the serve lease across plan+execute —
-          // the serving thread needs no lease discipline of its own
-          val got = IndexServe.bm25TopK(spark, root).collect().toSeq
-          gate.countDown()
-          if (got != pre) failures.add(new AssertionError(
-            s"serve diverged from pre-state:\n$got\nvs\n$pre"))
-          served.incrementAndGet()
-        } catch {
-          // a maintenance-window refusal is the DESIGNED outcome for
-          // a serve that lost the race (compaction landed in the
-          // microsecond gap between this loop's release and
-          // re-acquire) — back off and retry, exactly what a real
-          // request handler does; anything else is a genuine failure
-          case e: IllegalStateException
-              if e.getMessage.contains("maintenance") =>
-            Thread.sleep(10)
-          case t: Throwable => failures.add(t); stop.set(true)
+    val leased = new java.util.concurrent.CountDownLatch(1)
+    val attempted = new java.util.concurrent.CountDownLatch(1)
+    val hold = new Rule[LogicalPlan] {
+      def apply(plan: LogicalPlan): LogicalPlan = {
+        if (Thread.currentThread().getName == "graft-quiesce-server" &&
+            leased.getCount > 0) {
+          leased.countDown()
+          attempted.await(60, SECONDS)
         }
-      }
-    }, "graft-quiesce-server")
-    server.start()
-    gate.await()
-    // refuse while the loop is live (it re-acquires constantly; try a
-    // few times so we catch it with the lease actually held)
-    var refused = false
-    var attempts = 0
-    while (!refused && attempts < 200) {
-      try { TextQueries.compactTextIndex(spark, root); attempts += 1 }
-      catch {
-        case e: IllegalStateException =>
-          assert(e.getMessage.contains("serve lease"))
-          refused = true
+        plan
       }
     }
-    assert(refused, "compaction never saw an active serve lease")
-    stop.set(true)
-    server.join(60000)
+    val server = new Thread(() => {
+      try {
+        val got = IndexServe.bm25TopK(spark, root).collect().toSeq
+        if (got != pre) failures.add(new AssertionError(
+          s"serve diverged from pre-state:\n$got\nvs\n$pre"))
+        served.incrementAndGet()
+      } catch { case t: Throwable => failures.add(t) }
+    }, "graft-quiesce-server")
+    spark.experimental.extraOptimizations ++= Seq(hold)
+    try {
+      server.start()
+      assert(leased.await(60, SECONDS), "the serving thread never planned")
+      val e = intercept[IllegalStateException] {
+        TextQueries.compactTextIndex(spark, root)
+      }
+      assert(e.getMessage.contains("serve lease"))
+    } finally {
+      attempted.countDown()
+      spark.experimental.extraOptimizations =
+        spark.experimental.extraOptimizations.filterNot(_ eq hold)
+      server.join(60000)
+    }
     assert(failures.isEmpty, s"serving thread failed: ${failures.peek()}")
     assert(served.get() > 0)
     // quiesced: maintenance proceeds; serves resume on the post-state
